@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 MAX_ROUNDS = 50
@@ -40,13 +40,13 @@ MAX_ROUNDS = 50
 # whole loop is replaced by ONE single-task numpy kernel (see
 # _single_task_components).  The loop's per-round cost at small edge
 # counts is almost pure scheduling — each round is a localCheckpoint job
-# plus a fingerprint job over a handful of near-empty shuffles (measured
-# 4.5-6.8 s for 3 rounds over 142k edges at sf1.0, vs ~0.5 s for the
-# kernel).  10M edges keeps the task's working set ~100s of MB and its
-# wall in single-digit seconds; above it, the O(log n) loop is the only
-# shape that scales.  Memory-only mode: durable (checkpointed) runs keep
-# the round-table loop, whose per-round tables ARE the resumability
-# contract.
+# over a handful of near-empty shuffles (measured when each round also
+# paid a fingerprint job: 4.5-6.8 s for 3 rounds over 142k edges at
+# sf1.0, vs ~0.5 s for the kernel).  10M edges keeps the task's working
+# set ~100s of MB and its wall in single-digit seconds; above it, the
+# O(log n) loop is the only shape that scales.  Memory-only mode:
+# durable (checkpointed) runs keep the round-table loop, whose per-round
+# tables ARE the resumability contract.
 SMALL_GRAPH_MAX_EDGES = 10_000_000
 
 
@@ -132,7 +132,7 @@ def _single_task_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
+def _fingerprint_aggs() -> list:
     # bit_xor: order-insensitive, overflow-free (ANSI-safe) set fingerprint;
     # edges are distinct so xor cancellation of duplicates cannot occur.
     # Convergence-by-fingerprint is probabilistic: a (count, xor-of-xxhash64)
@@ -142,11 +142,16 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     # xor — probability ~2^-64 per round, astronomically below hardware
     # error rates; accepted in exchange for not paying an exceptAll job
     # per round (the alternative exact check doubles per-round cost).
-    row = edges.agg(
+    return [
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+    ]
+
+
+def _fingerprint(edges: DataFrame) -> tuple[int, int]:
+    """Its own job: only for a round reloaded on resume.  A round computed
+    by this call is fingerprinted by an Observation on its materialization."""
+    return tuple(edges.agg(*_fingerprint_aggs()).collect()[0])
 
 
 def connected_components(
@@ -196,18 +201,26 @@ def connected_components(
         ckpt = copy.copy(ckpt)
         ckpt.spark = loop_spark
 
-    def _cut(build, name: str) -> DataFrame:
-        # build is a thunk: in durable mode a committed round reloads
-        # from its table WITHOUT constructing (or running) the round plan
-        if durable:
-            return ckpt.stage(name, build)
-        return build().localCheckpoint(eager=True)
+    def _cut(build, name: str) -> tuple[DataFrame, tuple[int, int]]:
+        # -> (round edges, fingerprint).  build is a thunk: a committed
+        # durable round reloads WITHOUT constructing (or running) its plan,
+        # so no action ran to observe and Observation.get would block
+        obs = []
 
-    e = _cut(
+        def observed() -> DataFrame:
+            obs.append(Observation())
+            return build().observe(obs[0], *_fingerprint_aggs())
+
+        if durable:
+            e = ckpt.stage(name, observed)
+        else:
+            e = observed().localCheckpoint(eager=True)
+        return e, (tuple(obs[0].get.values()) if obs else _fingerprint(e))
+
+    e, prev = _cut(
         lambda: edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
         f"{stage_prefix}_round_000",
     )
-    prev = _fingerprint(e)
     if (
         not durable
         and small_graph_max_edges is not None
@@ -241,11 +254,10 @@ def connected_components(
     loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
     for rnd in range(1, max_rounds + 1):
         prev_e = e
-        e = _cut(
+        e, cur = _cut(
             lambda: _small_star(_large_star(prev_e)),
             f"{stage_prefix}_round_{rnd:03d}",
         )
-        cur = _fingerprint(e)
         if cur == prev:
             break
         prev = cur
@@ -279,14 +291,5 @@ def assignments_from_components(
     dense_ids = roots.select(
         "root",
         (F.dense_rank().over(Window.orderBy("root")) - 1).alias("cluster_id"),
-    )
-    return labeled.join(dense_ids, "root").select("doc_id", "cluster_id")
-
-
-def dense_relabel(labeled: DataFrame) -> DataFrame:
-    """(doc_id, root) -> (doc_id, cluster_id) with reference-parity dense ids."""
-    roots = labeled.select("root").distinct()
-    dense_ids = roots.select(
-        "root", (F.dense_rank().over(Window.orderBy("root")) - 1).alias("cluster_id")
     )
     return labeled.join(dense_ids, "root").select("doc_id", "cluster_id")

@@ -16,42 +16,62 @@ pipeline from the MEASURED corpus size:
   comparison.  The candidate-pair side — |pairs| >> |docs| in any
   duplicate-heavy corpus — is never shuffled and never carries a
   signature payload.  Measured at sf1.0 (34.9M pairs / 50k docs): 10-11 s
-  vs 159 s for the shuffle-hash JVM plan.  The JVM expression path is
-  unusable here even under a broadcast join (143 s): the unrolled
-  64-term equality sum exceeds HotSpot's 8000-byte JIT threshold, so
-  whole-stage codegen runs as *interpreted* bytecode per pair — exactly
-  the guide-§4.2 case for handing batches to vectorized native code.
+  vs 159 s for a shuffle-hash plan evaluating an unrolled 64-term JVM
+  equality sum, which HotSpot (8000-byte JIT limit) ran interpreted.
 * ``shuffle_hash`` — the only correct choice when signatures exceed
-  executor/worker memory (the 10^12-doc design point): both equi-joins
+  executor/worker memory (the 10^12-doc design point): both left joins
   hash-build the signature side per partition (sort-merge would sort the
-  fat pair side twice), and the Jaccard estimate is the unrolled JVM
-  expression.
+  fat pair side twice) and feed the joined rows to the same numpy count.
+
+Every kernel raises the same ValueError for a doc_id with no signature
+and for a signature whose length is not num_perm.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def jaccard_expr(sig_a: str, sig_b: str, num_perm: int) -> Column:
-    """fraction of equal positions — float division by num_perm.
+EDGE_SCHEMA = "src long, dst long, sim double"
 
-    UNROLLED into a scalar sum with constant array indices: higher-order
-    functions (zip_with/filter) run interpreted per row in Spark, with a
-    per-element lambda dispatch.  NOTE the codegen ceiling measured in
-    round 6: at num_perm=64 the generated method is too large for the JIT
-    (HotSpot's 8000-byte DontCompileHugeMethods limit), so this
-    expression executes as interpreted bytecode — fine for the residual
-    shuffle-hash path where the join dominates anyway, but the reason the
-    broadcast path uses the numpy kernel instead."""
-    eq_count = None
-    for i in range(num_perm):
-        term = (F.expr(f"{sig_a}[{i}]") == F.expr(f"{sig_b}[{i}]")).cast("int")
-        eq_count = term if eq_count is None else eq_count + term
-    return eq_count / F.lit(float(num_perm))
+
+def _jaccard(a: np.ndarray, b: np.ndarray, num_perm: int) -> np.ndarray:
+    """Row-wise equal positions / num_perm (exact in float64): the one
+    equality count every verify kernel uses."""
+    return (a == b).sum(axis=1) / float(num_perm)
+
+
+def _sig_matrix(sigs: pa.Array, num_perm: int) -> np.ndarray:
+    """list<long> signatures -> (n, num_perm) matrix.  Only offset
+    differences are used: ``flatten()`` is relative to a sliced array."""
+    lens = np.diff(sigs.offsets.to_numpy())
+    bad = lens[lens != num_perm]
+    if len(bad):
+        raise ValueError(f"verify: signature of length {bad[0]}, expected num_perm={num_perm}")
+    return np.asarray(sigs.flatten()).reshape(len(sigs), num_perm)
+
+
+ABSENT = "verify: {} references a doc_id absent from the signature table"
+
+
+def _rows(ids: np.ndarray, keys: np.ndarray, what: str) -> np.ndarray:
+    """Positions of ``keys`` in the sorted broadcast id index, bounds-
+    checked first: searchsorted returns len(ids) for a key above every id."""
+    pos = np.searchsorted(ids, keys)
+    if not ((pos < len(ids)).all() and np.array_equal(ids[pos], keys)):
+        raise ValueError(ABSENT.format(what))
+    return pos
+
+
+def _edges_batch(src, dst, sim, threshold: float) -> pa.RecordBatch:
+    keep = sim >= threshold
+    return pa.RecordBatch.from_arrays(
+        [pa.array(src[keep]), pa.array(dst[keep]), pa.array(sim[keep])],
+        ["src", "dst", "sim"],
+    )
 
 
 def _broadcast_signatures(
@@ -63,10 +83,7 @@ def _broadcast_signatures(
     (config.verify_broadcast_max_bytes)."""
     tbl = signatures.select(id_col, sig_col).toArrow()
     ids = tbl.column(id_col).to_numpy()
-    n = len(ids)
-    mat = np.asarray(tbl.column(sig_col).combine_chunks().flatten()).reshape(
-        n, num_perm
-    )
+    mat = _sig_matrix(tbl.column(sig_col).combine_chunks(), num_perm)
     order = np.argsort(ids)
     ids = np.ascontiguousarray(ids[order])
     # MinHash signature values are 32-bit (masked with 2^32-1 in
@@ -86,27 +103,32 @@ def _verify_kernel(bc, threshold: float, num_perm: int):
 
     One vectorized numpy pass per batch: two searchsorted lookups into
     the broadcast id index, two row gathers, one elementwise equality +
-    row sum.  sim = eq_count / num_perm is exact in float64 (integer /
-    power-of-two-free constant, same value the JVM expression computes)."""
+    row sum."""
 
     def gen(batches):
         ids, mat = bc.value
-        denom = float(num_perm)
         for b in batches:
             src = b.column("src").to_numpy()
             dst = b.column("dst").to_numpy()
-            si = np.searchsorted(ids, src)
-            di = np.searchsorted(ids, dst)
-            if not (np.array_equal(ids[si], src) and np.array_equal(ids[di], dst)):
-                raise ValueError(
-                    "verify: candidate pair references a doc_id absent from "
-                    "the signature table"
-                )
-            sim = (mat[si] == mat[di]).sum(axis=1) / denom
-            keep = sim >= threshold
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(src[keep]), pa.array(dst[keep]), pa.array(sim[keep])],
-                ["src", "dst", "sim"],
+            si = _rows(ids, src, "candidate pair")
+            di = _rows(ids, dst, "candidate pair")
+            yield _edges_batch(src, dst, _jaccard(mat[si], mat[di], num_perm), threshold)
+
+    return gen
+
+
+def _joined_kernel(threshold: float, num_perm: int):
+    """Shuffle-hash strategy: (src, dst, _sig_src, _sig_dst) batches from
+    the two left joins -> (src, dst, sim) batches, sim >= t."""
+
+    def gen(batches):
+        for b in batches:
+            a, c = b.column("_sig_src"), b.column("_sig_dst")
+            if a.null_count or c.null_count:
+                raise ValueError(ABSENT.format("candidate pair"))
+            sim = _jaccard(_sig_matrix(a, num_perm), _sig_matrix(c, num_perm), num_perm)
+            yield _edges_batch(
+                b.column("src").to_numpy(), b.column("dst").to_numpy(), sim, threshold
             )
 
     return gen
@@ -128,23 +150,17 @@ def _fused_kernel(bc, threshold: float, num_perm: int):
 
     def gen(batches):
         ids, mat = bc.value
-        denom = float(num_perm)
         tri_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for batch in batches:
             ci = batch.column("ci").to_numpy()
             cj = batch.column("cj").to_numpy()
             ms = batch.column("ms")
             offs = ms.offsets.to_numpy()
+            offs = offs - offs[0]  # flatten() is relative to a sliced array
             flat = ms.flatten()
             ds = np.asarray(flat.field("d"))
             cs = np.asarray(flat.field("c"))
-            rows = np.searchsorted(ids, ds)
-            if not np.array_equal(ids[rows], ds):
-                raise ValueError(
-                    "verify: band member references a doc_id absent from "
-                    "the signature table"
-                )
-            sig_rows = mat[rows]
+            sig_rows = mat[_rows(ids, ds, "band member")]
             out_lo, out_hi, out_sim = [], [], []
             for g in range(len(ci)):
                 lo_, hi_ = offs[g], offs[g + 1]
@@ -168,7 +184,7 @@ def _fused_kernel(bc, threshold: float, num_perm: int):
                     )
                     i, j = i[keep], j[keep]
                 sg = sig_rows[lo_:hi_]
-                sim = (sg[i] == sg[j]).sum(axis=1) / denom
+                sim = _jaccard(sg[i], sg[j], num_perm)
                 keep2 = sim >= threshold
                 if not keep2.any():
                     continue
@@ -179,9 +195,7 @@ def _fused_kernel(bc, threshold: float, num_perm: int):
             lo = np.concatenate(out_lo) if out_lo else np.empty(0, np.int64)
             hi = np.concatenate(out_hi) if out_hi else np.empty(0, np.int64)
             sm = np.concatenate(out_sim) if out_sim else np.empty(0, np.float64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(lo), pa.array(hi), pa.array(sm)], ["src", "dst", "sim"]
-            )
+            yield _edges_batch(lo, hi, sm, threshold)
 
     return gen
 
@@ -210,10 +224,7 @@ def verify_members(
     bc = _broadcast_signatures(signatures, id_col, sig_col, num_perm)
     return (
         members.select("ci", "cj", "ms")
-        .mapInArrow(
-            _fused_kernel(bc, threshold, num_perm),
-            "src long, dst long, sim double",
-        )
+        .mapInArrow(_fused_kernel(bc, threshold, num_perm), EDGE_SCHEMA)
         .distinct()
     )
 
@@ -239,17 +250,16 @@ def verify_pairs(
     if strategy == "broadcast":
         bc = _broadcast_signatures(signatures, id_col, sig_col, num_perm)
         return pairs.select("src", "dst").mapInArrow(
-            _verify_kernel(bc, threshold, num_perm),
-            "src long, dst long, sim double",
+            _verify_kernel(bc, threshold, num_perm), EDGE_SCHEMA
         )
     if strategy != "shuffle_hash":
         raise ValueError(f"unknown verify strategy: {strategy!r}")
     s1 = signatures.select(F.col(id_col).alias("src"), F.col(sig_col).alias("_sig_src"))
     s2 = signatures.select(F.col(id_col).alias("dst"), F.col(sig_col).alias("_sig_dst"))
+    # left joins: an endpoint with no signature must fail in the kernel
     return (
-        pairs.join(s1.hint("shuffle_hash"), "src")
-        .join(s2.hint("shuffle_hash"), "dst")
-        .withColumn("sim", jaccard_expr("_sig_src", "_sig_dst", num_perm))
-        .where(F.col("sim") >= F.lit(threshold))
-        .select("src", "dst", "sim")
+        pairs.select("src", "dst")
+        .join(s1.hint("shuffle_hash"), "src", "left")
+        .join(s2.hint("shuffle_hash"), "dst", "left")
+        .mapInArrow(_joined_kernel(threshold, num_perm), EDGE_SCHEMA)
     )

@@ -403,12 +403,15 @@ def build_spark(
     app: str = "sparkdedup",
     master: str | None = None,
     shuffle_partitions: int = 32,
-    driver_mem: str = "48g",
+    driver_mem: str | None = None,
 ) -> SparkSession:
     """Session tuned for the sandbox; on a real cluster these come from
     spark-submit conf.  In local mode the driver JVM IS the executor and
     holds every localCheckpoint block — size the heap for the data, not
-    for a driver."""
+    for a driver; by default half of physical RAM, so it fits the host."""
+    if driver_mem is None:
+        ram_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        driver_mem = f"{max(1, ram_mib // 2)}m"
     b = (
         SparkSession.builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -416,7 +419,7 @@ def build_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # PERF (not correctness): constraint propagation re-derives
         # constraints over our deliberately huge unrolled expression trees
-        # (21 banded xxhash64 keys, 64-term jaccard) on every AQE replan —
+        # (21 banded xxhash64 keys) on every AQE replan —
         # measured 2-6x driver-time blowup on the flagship/simhash queries
         # with it on.  The inferred IsNotNull filters are worthless here
         # (all join keys non-null by construction).  The library is

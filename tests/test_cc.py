@@ -181,3 +181,26 @@ def test_cc_durable_labels_match_memory_mode(spark, tmp_path):
     assert labels(connected_components(edges, ckpt=ck)) == labels(
         connected_components(edges)
     )
+
+
+@pytest.mark.parametrize("durable", [True, False])
+def test_fresh_cc_gets_fingerprints_from_round_actions(spark, tmp_path, monkeypatch, durable):
+    """Every round computed in this call is fingerprinted by an
+    Observation on its own write or localCheckpoint: the separate
+    fingerprint job is only for rounds reloaded on resume."""
+    import importlib
+
+    cc = importlib.import_module("sparkdedup.operators.connected_components")
+    from sparkdedup.checkpoint import CheckpointManager
+
+    def no_job(edges):
+        raise AssertionError("fingerprint job on a fresh round")
+
+    monkeypatch.setattr(cc, "_fingerprint", no_job)
+    n = 40
+    edge_list = [(i, i + 1) for i in range(n - 1)] + [(50, 51)]
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    ckpt = CheckpointManager(spark, str(tmp_path / "ck"), manifest={"m": 1}) if durable else None
+    star = connected_components(edges, ckpt=ckpt, small_graph_max_edges=None)
+    got = {(r["doc_id"], r["root"]) for r in star.collect()}
+    assert got == {(i, 0) for i in range(1, n)} | {(51, 50)}

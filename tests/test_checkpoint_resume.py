@@ -5,6 +5,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from sparkdedup.config import DedupConfig
 from sparkdedup.io.webtext import webtext_spark_df
 from sparkdedup.pipeline import DedupPipeline
@@ -259,3 +261,36 @@ def test_iceberg_without_catalog_fails_actionably(spark, tmp_path):
     df = spark.range(3)
     with pytest.raises(RuntimeError, match="Iceberg catalog"):
         ck.stage("01_x", lambda: df)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "json"])
+def test_stage_reads_back_written_schema(spark, tmp_path, fmt):
+    """A fresh stage is read back with the schema it was written with, by
+    no Spark job (no schema inference), and a resumed stage gets the same
+    schema and rows."""
+    from sparkdedup.checkpoint import CheckpointManager
+
+    df = spark.createDataFrame(
+        [(3, 1, [5, 6], 0.25), (4, 2, [7, 8], 0.5)],
+        "z int, a long, sig array<bigint>, sim double",
+    )
+    root = str(tmp_path / fmt)
+    fresh_ck = CheckpointManager(spark, root, fmt=fmt, manifest={"m": 1})
+    fresh_ck._write(df, "s")
+    fresh_ck._write_manifest("s", df.schema)
+    sc = spark.sparkContext
+    sc.setJobGroup(f"readback-{fmt}", "read back one stage")
+    try:
+        fresh = fresh_ck._read("s")
+        read_jobs = sc.statusTracker().getJobIdsForGroup(f"readback-{fmt}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert read_jobs == []
+    assert fresh.schema.simpleString() == df.schema.simpleString()
+
+    def recompute():
+        raise AssertionError("committed stage recomputed")
+
+    resumed = CheckpointManager(spark, root, fmt=fmt, manifest={"m": 1}).stage("s", recompute)
+    assert resumed.schema == fresh.schema
+    assert sorted(resumed.collect()) == sorted(fresh.collect()) == sorted(df.collect())

@@ -29,7 +29,7 @@ def _corpus(spark, n=120, dup_every=3):
 
 def _edges_sorted(df):
     return [
-        (r.src, r.dst, round(r.sim, 9))
+        (r.src, r.dst, r.sim)
         for r in df.select("src", "dst", "sim").orderBy("src", "dst").collect()
     ]
 
